@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -54,54 +54,70 @@ object Bench {
     }.min
   }
 
+  /** Per-query minima over `nSweeps` full sweeps of `queries`, each run
+    * through the noop sink; `afterSweep(i, total)` runs after sweep i.
+    *
+    * The host occasionally freezes a JVM for 5–20 s (observed: identical
+    * row-local queries 0.6 s in one run, 14 s in the next, with CPU/disk
+    * microbenchmarks stable throughout — see SCALE.md round-4 variance
+    * notes). Round 4's min-of-two retry-per-query failed under SUSTAINED
+    * degradation: both the first run and the immediate retry of a query
+    * sat inside the same degraded window. Fix: run the FULL sweep N times
+    * (the sweeps are minutes apart, so a degraded window rarely covers the
+    * same query in every sweep) and report per-query MINIMA across sweeps.
+    * Within a sweep, a measurement over the suspect threshold still gets
+    * one immediate retry (cheap extra sample; a genuine heavy query stays
+    * heavy). `value` = min-sum (the plan signal); `stall_suspect` = true
+    * when the worst sweep exceeds 3x the min-sum — then the per-query
+    * numbers are still trustworthy, only the wall clock ate stalls.
+    *
+    * A query that throws in ANY sweep lands in `failed` with its message,
+    * is neither retried nor run again, and is left out of the minima and
+    * of every sweep total: a failure must never read as a fast timing.
+    */
+  def sweep(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      nSweeps: Int)(afterSweep: (Int, Double) => Unit): Sweeps = {
+    val SuspectSec = 4.0
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): Option[Double] = {
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed(name) = String.valueOf(e.getMessage).linesIterator
+            .nextOption().getOrElse("").take(200)
+          None
+      }
+    }
+    val sweeps: Seq[Map[String, Double]] = (1 to nSweeps).map { i =>
+      val m = queries.filterNot(q => failed.contains(q._1)).flatMap {
+        case (name, fn) =>
+          timeOnce(name, fn).flatMap { t1 =>
+            if (t1 > SuspectSec) timeOnce(name, fn).map(math.min(t1, _))
+            else Some(t1)
+          }.map(name -> _)
+      }.toMap
+      afterSweep(i, m.values.sum)
+      m
+    }
+    val ok = queries.map(_._1).filterNot(failed.contains)
+    Sweeps(ok.map(name => name -> sweeps.map(_(name)).min),
+      sweeps.map(m => ok.map(m).sum), failed.toSeq)
+  }
+
+  /** `minima` and `totals` cover only the queries that never threw. */
+  final case class Sweeps(minima: Seq[(String, Double)], totals: Seq[Double],
+      failed: Seq[(String, String)]) {
+    def value: Double = minima.map(_._2).sum
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.extensions", "graft.sqlcat.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Shuffle machinery (round-14, guide §2.1–2.2, measured A/B in
-      // OPTIMIZATION_r14.md): the bypass-merge shuffle writer creates
-      // M×R files per shuffle (32 maps × 32 reduces = 1024 creates on
-      // this FS); the sort writer — the only path at scale, where
-      // R > 200 — writes one data+index pair per map task. Forcing it
-      // (threshold 0) cut the 32-core per-query overhead ~2× and fixed
-      // the measured ANTI-scaling (8-core sweeps beating 32-core ones).
-      // Shuffle scratch goes to the fastest local medium when present
-      // (tmpfs here; NVMe scratch on a real cluster — guide §2.1 names
-      // local disk as the tighter shuffle limit). Both parameterized,
-      // results unaffected.
-      // Joins (round-14, guide §3.1/§9): allow shuffled-hash when the
-      // per-partition build side fits — SMJ's sorts are pure overhead for
-      // the band-bucket/candidate equi-joins; AQE still rewrites to
-      // broadcast when a side is tiny. Results identical (total orders).
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64MB"))
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "0"))
-      // Optimizer (round-14, guide §1.2 step 3): constraint propagation
-      // spends planner time inferring not-null constraints and REINSERTS
-      // them as filters that re-evaluate whole derived expression trees
-      // per row (the measured 8× shingle-substitution pathology the
-      // persist pins in Dedup/CorpusOps already guard against — that
-      // cost grows WITH data, it is not a local-mode artifact).
-      // Interleaved same-JVM A/B over 18 queries: geomean 0.94, worst
-      // regression +9% (q39), wins to −26% (q167). Parameterized;
-      // results are plan-identical by construction (optimizer rule only).
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "false"))
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-          "/dev/shm/graft-spark-local"
-        else System.getProperty("java.io.tmpdir")))
-      .getOrCreate()
+    val spark = GraftSession.builder().appName("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // one warm pass on the smallest SF to JIT/codegen-compile outside timing;
@@ -119,21 +135,6 @@ object Bench {
     spark.range(1).select(upper(lit("a")), lower(lit("A")), initcap(lit("a")))
       .write.format("noop").mode("overwrite").save()
 
-    // The host occasionally freezes a JVM for 5–20 s (observed: identical
-    // row-local queries 0.6 s in one run, 14 s in the next, with CPU/disk
-    // microbenchmarks stable throughout — see SCALE.md round-4 variance
-    // notes). Round 4's min-of-two retry-per-query failed under SUSTAINED
-    // degradation: both the first run and the immediate retry of a query sat
-    // inside the same degraded window. Fix: run the FULL sweep N times (the
-    // sweeps are minutes apart, so a degraded window rarely covers the same
-    // query in every sweep) and report per-query MINIMA across sweeps. Within
-    // a sweep, a measurement over the suspect threshold still gets one
-    // immediate retry (cheap extra sample; a genuine heavy query stays heavy).
-    // We emit `value` = min-sum (the plan signal), `wall` = actual elapsed
-    // across all sweeps, per-sweep totals, and `stall_suspect` = true when
-    // the worst sweep exceeds 3x the min-sum — then the per-query numbers are
-    // still trustworthy, only the wall clock ate stalls.
-    val SuspectSec = 4.0
     val nSweeps = sys.env.getOrElse("SPARK_GRAFT_SWEEPS", "2").toInt.max(1)
 
     // Host drift happens WITHIN a run, not just between runs (observed
@@ -149,35 +150,24 @@ object Bench {
       scala.collection.mutable.ArrayBuffer(calibrationSec(spark))
     System.err.println(
       f"[bench] calibration anchor (pre) ${calSamples.head}%.3f s")
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
     val wallT0 = System.nanoTime()
-    val sweeps: Seq[Map[String, Double]] = (1 to nSweeps).map { i =>
-      val m = names.map { case (name, fn) =>
-        val t1 = timeOnce(name, fn)
-        name -> (if (t1 > SuspectSec) math.min(t1, timeOnce(name, fn)) else t1)
-      }.toMap
+    val sw = sweep(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1),
+        nSweeps) { (i, total) =>
       calSamples += calibrationSec(spark)
-      System.err.println(f"[bench] sweep $i/$nSweeps total ${m.values.sum}%.1f s" +
+      System.err.println(f"[bench] sweep $i/$nSweeps total $total%.1f s" +
         f" (anchor ${calSamples.last}%.3f s)")
-      m
     }
     val calibration = { val s = calSamples.sorted; s((s.length - 1) / 2) }
     val wallSec = (System.nanoTime() - wallT0) / 1e9
-    val results = names.map { case (name, _) =>
-      name -> sweeps.map(_(name)).min
-    }
-    val sweepTotals = sweeps.map(_.values.sum)
-    val minSum = results.map(_._2).sum
+    val results = sw.minima
+    val sweepTotals = sw.totals
+    val minSum = sw.value
     val stallSuspect = sweepTotals.max > 3.0 * minSum
+    val failedJson = {
+      import org.json4s._
+      org.json4s.jackson.JsonMethods.compact(
+        JObject(sw.failed.map { case (k, m) => k -> JString(m) }.toList))
+    }
     // CDC apply-path throughput (the reference's headline metric is its
     // ~10 rec/s ingest + 3-5 min freshness): 100k generated events through
     // parse->filter->LWW->merge-commit in 4 micro-batches. Clear the
@@ -203,7 +193,7 @@ object Bench {
       .mkString("{", ",", "}")
     val sweepJson = sweepTotals.map(s => f"$s%.3f").mkString("[", ",", "]")
     val calJson = calSamples.map(c => f"$c%.3f").mkString("[", ",", "]")
-    println(f"""{"metric":"total","value":$minSum%.3f,"unit":"sec","wall":$wallSec%.3f,"sweeps":$nSweeps,"sweep_totals":$sweepJson,"stall_suspect":$stallSuspect,"calibration_sec":$calibration%.3f,"calibration_samples":$calJson,"queries":$qs,"cdc_rec_per_sec":${cdc.recPerSec}%.1f,"cdc_freshness_sec":$freshness%.2f,"sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$minSum%.3f,"unit":"sec","wall":$wallSec%.3f,"sweeps":$nSweeps,"sweep_totals":$sweepJson,"stall_suspect":$stallSuspect,"calibration_sec":$calibration%.3f,"calibration_samples":$calJson,"queries":$qs,"failed":$failedJson,"cdc_rec_per_sec":${cdc.recPerSec}%.1f,"cdc_freshness_sec":$freshness%.2f,"sf":"$sfDir"}""")
     // The full line above is ~3 KB; snapshot tooling that keeps only the tail
     // of the bench output has been observed to truncate it (BENCH_r05.json
     // lost q00–q23, `value`, `wall` and `stall_suspect`). Emit a second,
@@ -214,7 +204,7 @@ object Bench {
     // host measured 20.4k/20.2k (r6) vs 20.9k/19.8k (HEAD) - statistically
     // identical, so the swing is HOST noise, not a table-layer regression;
     // the absolute number tracks host conditions run to run.
-    println(f"""{"metric":"summary","value":$minSum%.3f,"unit":"sec","wall":$wallSec%.3f,"stall_suspect":$stallSuspect,"calibration_sec":$calibration%.3f,"cdc_rec_per_sec":${cdc.recPerSec}%.1f,"cdc_freshness_sec":$freshness%.2f,"cdc_note":"rate is host-sensitive; r8 interleaved A/B vs round-6 code showed no code regression; calibration_sec is the pinned host anchor (see Bench.calibrationSec)","n_queries":${results.size},"sf":"$sfDir"}""")
+    println(f"""{"metric":"summary","value":$minSum%.3f,"unit":"sec","wall":$wallSec%.3f,"stall_suspect":$stallSuspect,"calibration_sec":$calibration%.3f,"cdc_rec_per_sec":${cdc.recPerSec}%.1f,"cdc_freshness_sec":$freshness%.2f,"cdc_note":"rate is host-sensitive; r8 interleaved A/B vs round-6 code showed no code regression; calibration_sec is the pinned host anchor (see Bench.calibrationSec)","n_queries":${results.size},"failed":$failedJson,"sf":"$sfDir"}""")
     // The stdout tail-capture above truncates the per-query map past ~64
     // entries; persist the COMPLETE map as a repo-root artifact so
     // round-over-round regression diffs can audit 100% of queries.
@@ -321,7 +311,7 @@ object Bench {
       val detail = results.map { case (k, v) => "\"" + k + f"""":$v%.3f""" }
         .mkString("{\n  ", ",\n  ", "\n}")
       val body =
-        f"""{"metric":"total","value":$minSum%.3f,"unit":"sec","wall":$wallSec%.3f,"sweeps":$nSweeps,"sweep_totals":$sweepJson,"stall_suspect":$stallSuspect,"calibration_sec":$calibration%.3f,"calibration_samples":$calJson,"cdc_rec_per_sec":${cdc.recPerSec}%.1f,"cdc_freshness_sec":$freshness%.2f,"sf":"$sfDir","n_queries":${results.size}$normJson,
+        f"""{"metric":"total","value":$minSum%.3f,"unit":"sec","wall":$wallSec%.3f,"sweeps":$nSweeps,"sweep_totals":$sweepJson,"stall_suspect":$stallSuspect,"calibration_sec":$calibration%.3f,"calibration_samples":$calJson,"cdc_rec_per_sec":${cdc.recPerSec}%.1f,"cdc_freshness_sec":$freshness%.2f,"sf":"$sfDir","n_queries":${results.size},"failed":$failedJson$normJson,
 "queries":$detail}"""
       java.nio.file.Files.write(target, body.getBytes("UTF-8"))
       ()

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
@@ -16,8 +15,8 @@ import graft.table.MergeTable
   * Baseline context: the reference sustains ~10 rec/s fixture ingest with
   * 3–5 min freshness (BASELINE.md); this path is the engine's replacement.
   *
-  * Env knobs: SPARK_GRAFT_CDC_EVENTS (default 200000),
-  * SPARK_GRAFT_CDC_BATCHES (default 8), SPARK_GRAFT_CPUS (default 32).
+  * `Bench` reports it as `cdc_rec_per_sec`; the standalone CDC drive is
+  * `python3 perfbench/run.py --workload cdc_ingest --seed 1 --seconds 20`.
   */
 object CdcBench {
 
@@ -25,7 +24,7 @@ object CdcBench {
       finalRows: Long, batches: Int)
 
   /** Generate `nEvents` CDC lines as `nBatches` files and stream them
-    * through the full pipeline; shared by CdcBench and Bench.
+    * through the full pipeline.
     */
   def run(spark: SparkSession, nEvents: Long, nBatches: Int): Result = {
     val base = java.nio.file.Paths.get(Scratch.tempDir("cdcbench"))
@@ -48,9 +47,6 @@ object CdcBench {
     val q = CdcPipeline.start(spark, cfg)
     q.awaitTermination(600000)
     val sec = (System.nanoTime() - t0) / 1e9
-    if (sys.env.contains("GRAFT_CDC_DEBUG"))
-      q.recentProgress.foreach(p =>
-        System.err.println(s"[progress b${p.batchId}] ${p.durationMs}"))
 
     val table = MergeTable.retailTrans(base.resolve("table").toString)
     Result(nEvents / sec, sec, table.read(spark).count(), table.history.size)
@@ -64,23 +60,4 @@ object CdcBench {
     */
   def warmup(spark: SparkSession): Unit = { run(spark, 20000, 1); () }
 
-  def main(args: Array[String]): Unit = {
-    val nEvents = sys.env.getOrElse("SPARK_GRAFT_CDC_EVENTS", "200000").toLong
-    val nBatches = sys.env.getOrElse("SPARK_GRAFT_CDC_BATCHES", "8").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-cdc-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    warmup(spark)
-    val r = run(spark, nEvents, nBatches)
-    println(f"""{"metric":"cdc_apply_rate","value":${r.recPerSec}%.1f,"unit":"rec/sec","events":$nEvents,"batches":${r.batches},"final_rows":${r.finalRows},"seconds":${r.seconds}%.2f}""")
-    spark.stop()
-  }
 }

@@ -16,10 +16,16 @@ package graft
   * storage; only per-run scratch belongs here.
   */
 object Scratch {
-  lazy val root: String = sys.env.getOrElse("SPARK_GRAFT_SCRATCH_DIR",
+  lazy val root: String =
+    sys.env.getOrElse("SPARK_GRAFT_SCRATCH_DIR", fastLocal("graft-scratch"))
+
+  /** `/dev/shm/<name>` when tmpfs is writable, else java.io.tmpdir — the
+    * one placement rule for per-run scratch and Spark's shuffle dir.
+    */
+  def fastLocal(name: String): String =
     if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-      "/dev/shm/graft-scratch"
-    else System.getProperty("java.io.tmpdir"))
+      s"/dev/shm/$name"
+    else System.getProperty("java.io.tmpdir")
 
   def tempDir(prefix: String): String = {
     val base = java.nio.file.Paths.get(root)

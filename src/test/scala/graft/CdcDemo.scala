@@ -3,7 +3,6 @@ package graft
 // Scratch verification driver: drives the public API end-to-end the way a
 // library user would. Not a test suite; run with Test/runMain graft.CdcDemo.
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.fixtures.GoldenCorpus
 import graft.stream.CdcPipeline
@@ -11,14 +10,7 @@ import graft.table.MergeTable
 
 object CdcDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("cdc-demo")
-      .config("spark.sql.extensions", "graft.sqlcat.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cores = 4).appName("cdc-demo").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = Files.createTempDirectory("cdcdemo")

@@ -501,6 +501,27 @@ class InferenceSpec extends SparkSpec {
     assert(r(("c", 2L)).isNullAt(r(("c", 2L)).fieldIndex("pacf6")))
   }
 
+  test("div on DECIMAL(38,0): BIGINT result, truncation toward zero, " +
+      "silent 64-bit wrap past the BIGINT range") {
+    // the fixed-point contract of pacf and the mannWhitney/logRank
+    // variance terms: -7 div 2 = -3 (toward zero, not floor), 25 div 4 =
+    // 6; 6e36 div 2.7e15 = 2222222222222222222222 does not fit a BIGINT
+    // and comes back as its low 64 bits, with no ANSI overflow error
+    val q = spark.sql(
+      """SELECT CAST(6e36 AS DECIMAL(38,0)) div CAST(2.7e15 AS DECIMAL(38,0)) AS big,
+                CAST(-7 AS DECIMAL(38,0)) div CAST(2 AS DECIMAL(38,0)) AS neg,
+                CAST(25 AS DECIMAL(38,0)) div CAST(4 AS DECIMAL(38,0)) AS small""")
+    assert(q.schema.map(_.dataType) ===
+      Seq.fill(3)(org.apache.spark.sql.types.LongType))
+    val row = q.collect().head
+    val quotient = BigInt("6" + "0" * 36) / BigInt("27" + "0" * 14)
+    assert(quotient === BigInt("2222222222222222222222"))
+    assert(row.getLong(0) === quotient.longValue)
+    assert(row.getLong(0) === 8612933377076028302L)
+    assert(row.getLong(1) === -3L)
+    assert(row.getLong(2) === 6L)
+  }
+
   test("sprt: H1 crossing, H0 crossing, and continue, with exact " +
       "frozen-constant LLR sums") {
     // 10 successes/day: +2876820/day -> crosses A6=2944438 on day 2;

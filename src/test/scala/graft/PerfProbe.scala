@@ -1,112 +1,100 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import java.util.concurrent.ConcurrentHashMap
 
-/** Scratch micro-profiler (Test/runMain graft.PerfProbe [sfDir] [query...]):
-  * times each named SparkEntry query twice (cold + warm) through the noop
-  * sink; with no query args, runs a fixed dedup-stage breakdown.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Per-query micro-profiler (Test/runMain graft.PerfProbe [sfDir] [query...]).
+  *
+  * Named queries run three times (cold, warm, warm2) through the noop sink;
+  * with no query arguments every SparkEntry query runs once, in bench
+  * order. Each run prints one line: wall time, the Spark jobs, stages and
+  * tasks it submitted, the driver gap (wall time no job was running —
+  * planning, codegen, commit bookkeeping), and the persisted RDDs / cached
+  * MB left behind after it (cumulative, so an operator that pins cache
+  * blocks past its call shows as a step). Named runs also print one line
+  * per job with its duration and description, which carries the
+  * `Phases.labeled` phase names of multi-job engine operations.
+  *
+  * `PROBE_CONF="k=v,k=v"` overlays Spark confs on the session at launch.
   */
 object PerfProbe {
-  def time[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"[probe] $label%-40s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-    r
+  private final case class Job(id: Int, start: Long, desc: String,
+      var end: Long = 0L, var stages: Int = 0, var tasks: Int = 0)
+
+  /** Every job since the last `drain()`, with its completed stages/tasks. */
+  private final class JobLog extends SparkListener {
+    private val jobs = new ConcurrentHashMap[Int, Job]()
+    private val stageJob = new ConcurrentHashMap[Int, Int]()
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val desc = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description")))
+        .getOrElse("")
+      jobs.put(e.jobId, Job(e.jobId, e.time, desc))
+      e.stageIds.foreach(stageJob.put(_, e.jobId))
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      Option(stageJob.get(e.stageInfo.stageId)).flatMap(j => Option(jobs.get(j)))
+        .foreach { j => j.stages += 1; j.tasks += e.stageInfo.numTasks }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      Option(jobs.get(e.jobId)).foreach(_.end = e.time)
+    def drain(): Seq[Job] = {
+      Thread.sleep(200) // listener events arrive asynchronously
+      val out = jobs.values().toArray(Array.empty[Job]).toSeq.sortBy(_.id)
+      jobs.clear(); stageJob.clear()
+      out
+    }
   }
+
+  /** Milliseconds covered by at least one job (concurrent jobs overlap). */
+  private def busyMs(jobs: Seq[Job]): Long =
+    jobs.filter(_.end > 0).sortBy(_.start)
+      .foldLeft((0L, Long.MinValue)) { case ((busy, reach), j) =>
+        (busy + (j.end - math.max(j.start, reach)).max(0L), math.max(reach, j.end))
+      }._1
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    // PROBE_CPUS lets scaling experiments vary the core count the same way
-    // the driver's low-core sweep does (shuffle partitions track it, as in
-    // Bench); default matches the official bench.
-    val cpus = sys.env.getOrElse("PROBE_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-probe")
-      .config("spark.sql.extensions", "graft.sqlcat.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match the Bench shuffle-machinery defaults (round-14) so probe
-      // readings stay comparable to official bench lines
-      // Joins (round-14, guide §3.1/§9): allow shuffled-hash when the
-      // per-partition build side fits — SMJ's sorts are pure overhead for
-      // the band-bucket/candidate equi-joins; AQE still rewrites to
-      // broadcast when a side is tiny. Results identical (total orders).
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64MB"))
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "0"))
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "false"))
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        if (java.nio.file.Files.isWritable(java.nio.file.Paths.get("/dev/shm")))
-          "/dev/shm/graft-spark-local"
-        else System.getProperty("java.io.tmpdir")))
-    // A/B experiments: PROBE_CONF="k=v,k=v" overlays arbitrary SQL confs.
+    val builder = GraftSession.builder().appName("graft-probe")
     sys.env.get("PROBE_CONF").foreach(_.split(',').filter(_.contains("="))
       .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // PROBE_JOBS=1: log every Spark job's wall time + call site so a
-    // multi-job query's cost can be attributed stage by stage
-    if (sys.env.contains("PROBE_JOBS"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-          override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            val desc = Option(js.properties)
-              .flatMap(p => Option(p.getProperty("spark.job.description")))
-              .getOrElse("")
-            t0.put(js.jobId, (System.nanoTime(),
-              js.stageInfos.map(si => si.name.takeWhile(_ != '(').trim + ":" +
-                si.numTasks).mkString("[", " ", "]").take(160) + " desc=" + desc.take(80)))
-          }
-          override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            Option(t0.remove(je.jobId)).foreach { case (t, site) =>
-              println(f"[job] ${je.jobId}%4d ${(System.nanoTime() - t) / 1e9}%7.3f s  $site")
-            }
-          }
-        })
+    val sc = spark.sparkContext
+    val log = new JobLog
+    sc.addSparkListener(log)
 
-    def noop(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // bisection micro-variants for one-time-cost hunts (x_… names)
-    val variants: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-      "x_upper" -> ((s, d) => Tables.part(s, d).select(upper(col("p_brand")).as("u")).groupBy("u").count()),
-      "x_substr" -> ((s, d) => Tables.part(s, d).groupBy(col("p_brand")).agg(min(substring(col("p_type"), 1, 6)).as("pfx"))),
-      "x_cdist" -> ((s, d) => Tables.part(s, d).groupBy(col("p_brand")).agg(countDistinct(col("p_type")).as("n"))),
-      "x_cdist_mix" -> ((s, d) => Tables.part(s, d).groupBy(col("p_brand"))
-        .agg(min(length(col("p_name"))).as("a"), countDistinct(col("p_type")).as("n"))),
-      "x_minstr" -> ((s, d) => Tables.part(s, d).groupBy(col("p_brand")).agg(min(col("p_type")).as("m"))),
-      "x_orderby" -> ((s, d) => Tables.part(s, d).groupBy(col("p_brand")).agg(count(lit(1)).as("n")).orderBy(col("p_brand")))
-    )
-    val queries = args.drop(1)
-    if (queries.nonEmpty) {
-      // the pinned Bench anchor, so a probe reading is host-normalizable
-      // against any official BENCH_DETAIL artifact
-      println(f"[probe] calibration anchor ${Bench.calibrationSec(spark)}%.3f s")
-      queries.foreach { q =>
-        val fn = variants.getOrElse(q, SparkEntry.queries(q))
-        time(s"$q cold")(noop(fn(spark, sfDir)))
-        time(s"$q warm")(noop(fn(spark, sfDir)))
-        time(s"$q warm2")(noop(fn(spark, sfDir)))
+    def probe(label: String, fn: (SparkSession, String) => DataFrame,
+        perJob: Boolean): Unit = {
+      log.drain()
+      val t0 = System.nanoTime()
+      val err = try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save(); ""
+      } catch { case e: Throwable => s"  FAILED ${String.valueOf(e.getMessage).take(80)}" }
+      val wall = (System.nanoTime() - t0) / 1e9
+      val jobs = log.drain()
+      val cachedMB = sc.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum >> 20
+      println(f"[probe] $label%-34s ${wall}%7.2f s  jobs=${jobs.size}%3d " +
+        f"stages=${jobs.map(_.stages).sum}%3d tasks=${jobs.map(_.tasks).sum}%5d " +
+        f"driver-gap=${wall - busyMs(jobs) / 1e3}%6.2f s " +
+        f"rdds=${sc.getPersistentRDDs.size}%3d cachedMB=$cachedMB%5d$err")
+      if (perJob) jobs.foreach { j =>
+        println(f"[job]     ${j.id}%4d ${(j.end - j.start).max(0L) / 1e3}%7.3f s " +
+          f"stages=${j.stages}%2d tasks=${j.tasks}%4d ${j.desc.take(120)}")
       }
-    } else {
-      import graft.operators.Dedup
-      val docs = Tables.fanout(Tables.documents(spark, sfDir))
-      time("warmup count")(docs.count())
-      val sa = Dedup.shingleArrays(docs, 3)
-      time("shingleArrays")(noop(sa))
-      time("shingleArrays x2")(noop(sa))
-      time("full q26")(noop(Dedup.ngramJaccardPairs(docs, 3, 0.8)))
-      time("full q27 minhash")(noop(Dedup.minhashLshPairs(docs, 3, 16, 4, 0.8)))
-      time("full q28 simhash")(noop(Dedup.simhashPairs(docs, 10)))
+    }
+
+    // the pinned Bench anchor, so a probe reading is host-normalizable
+    // against any official BENCH_DETAIL artifact
+    println(f"[probe] calibration anchor ${Bench.calibrationSec(spark)}%.3f s")
+    val queries = args.drop(1)
+    if (queries.nonEmpty) queries.foreach { q =>
+      val fn = SparkEntry.queries(q)
+      Seq("cold", "warm", "warm2").foreach(run => probe(s"$q $run", fn, perJob = true))
+    }
+    else SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (q, fn) =>
+      probe(q, fn, perJob = false)
     }
     spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for named queries to plans/<tag>/<query>_<suffix>.txt
   * Usage: Test/runMain graft.PlanFile <sfDir> <tag> <suffix> <query...>
@@ -9,25 +8,7 @@ import org.apache.spark.sql.SparkSession
 object PlanFile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val tag = args(1); val suffix = args(2)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-planfile")
-      .config("spark.sql.extensions", "graft.sqlcat.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // mirror the Bench session defaults (round-14) so dumped plans show
-      // the join strategy / shuffle shape the bench actually runs
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "64MB"))
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "0"))
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "false"))
-      .getOrCreate()
+    val spark = GraftSession.builder().appName("graft-planfile").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(s"plans/$tag"))
     graft.operators.PlanCapture.enabled = true

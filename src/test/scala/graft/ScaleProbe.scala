@@ -361,15 +361,7 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("all")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale")
-      .config("spark.sql.extensions", "graft.sqlcat.GraftSqlExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().appName("graft-scale").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // `incr`: the O(delta + candidates)-per-batch claim of the persistent
